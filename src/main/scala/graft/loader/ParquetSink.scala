@@ -27,9 +27,8 @@ class ParquetSink(spark: SparkSession, config: GraftConfig,
   private val compactionEnabled =
     config.partitionCols.isEmpty && !config.skipExistingFiles
 
+  /** Lands one non-empty batch; the caller skips streams with no rows. */
   def write(batch: DataFrame): Unit = {
-    // schema-only stream (no records): the reference writes no file either
-    if (batch.isEmpty) return
     val preload =
       if (compactionEnabled)
         Compaction.readMostRecentFile(spark, dir, streamSchema,

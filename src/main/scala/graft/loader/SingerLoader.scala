@@ -8,15 +8,23 @@ import graft.schema.{Flattener, JsonSchemaConverter}
 /** The Singer → partitioned-parquet dataflow, Spark-first (reference
   * pipeline: target_hdfs/target.py + sinks.py; see SURVEY §3.1).
   *
-  * Control plane (SCHEMA / STATE / ACTIVATE_VERSION — a handful of lines)
-  * is parsed on the driver; the record plane never leaves the executors:
-  * records are routed by `get_json_object` on the raw line (one parse pass,
-  * persisted so the per-stream writes re-read the routed cache instead of
+  * Control plane (SCHEMA / STATE / ACTIVATE_VERSION / BATCH — a handful
+  * of distinct lines) is parsed on the driver; the record plane never
+  * leaves the executors: every line is routed by one `json_tuple` parse
+  * (persisted, so every later pass re-reads the routed cache instead of
   * rescanning raw input), parsed with `from_json` against the stream's
   * converted `StructType`, flattened and projected as pure Catalyst
   * expressions, and written by the parquet writer. No per-record driver
   * loop anywhere: parallelism is the number of input splits, and the only
-  * shuffle is the optional repartition by `partition_cols`.
+  * shuffles are the two check aggregations and the optional repartition by
+  * `partition_cols`.
+  *
+  * Checks run as two scans of the routed cache, whatever the number of
+  * streams: pass A ([[controlMessages]]) probes the protocol, reduces the
+  * control plane and counts each stream's RECORDs; pass B
+  * ([[validateStream]]) validates every constrained stream at once. Every
+  * stream is validated before any stream is written, so a rejected batch
+  * lands nothing.
   *
   * Protocol strictness (singer-sdk parity): lines without a `type`, RECORDs
   * without a payload, RECORDs for undeclared streams, and conflicting
@@ -41,53 +49,47 @@ object SingerLoader {
       activateVersions: Seq[ActivateVersionMessage],
       schemas: Map[String, SchemaMessage])
 
+  /** Pass A's result: the control messages in input order (the surviving
+    * STATE last), each RECORD stream's inline record count, and the
+    * streams whose RECORDs carry a `version` stamp. */
+  private[graft] final case class ControlPlane(
+      messages: Seq[SingerMessage],
+      recordCounts: Map[String, Long],
+      versionedStreams: Set[String])
+
+  private val KnownTypes =
+    Seq("RECORD", "SCHEMA", "STATE", "ACTIVATE_VERSION", "BATCH")
+
   /** Load a Singer JSONL file (batch replay of a tap's output). */
   def loadFile(spark: SparkSession, path: String, config: GraftConfig): LoadResult =
     load(spark, spark.read.textFile(path), config)
+
+  /** One parse pass over the input: `json_tuple` extracts every routing
+    * field from a SINGLE json parse (separate `get_json_object` calls
+    * would each re-parse the line). NOT spread: unlike the parquet tables,
+    * text input is byte-range splittable (openCost-floored), so the parse
+    * already parallelizes; a repartition ahead of it was measured ~25%
+    * SLOWER at 100k rows — shuffling the raw JSON strings costs more than
+    * the extra cores win. */
+  private[graft] def route(lines: Dataset[String]): DataFrame =
+    lines.toDF("value")
+      .filter(length(trim(col("value"))) > 0)
+      .select(col("value"),
+        json_tuple(col("value"), "type", "stream", "record", "version",
+          "time_extracted"))
+      .toDF("value", "t", "stream", "record", "version", "te")
 
   /** @param knownSchemas schemas carried over from earlier batches (the
     *                     streaming path: one SCHEMA message, then record-only
     *                     appends across triggers) */
   def load(spark: SparkSession, lines: Dataset[String], config: GraftConfig,
       knownSchemas: Map[String, SchemaMessage] = Map.empty): LoadResult = {
-    // one parse pass over the input, cached for every consumer below —
-    // json_tuple extracts all three routing fields from a SINGLE json parse
-    // (three get_json_object calls would each re-parse the line)
-    // NOT spread: unlike the parquet tables, text input is byte-range
-    // splittable (openCost-floored), so the parse already parallelizes;
-    // a repartition ahead of it was measured ~25% SLOWER at 100k rows —
-    // shuffling the raw JSON strings costs more than the extra cores win.
-    val routed = lines.toDF("value")
-      .filter(length(trim(col("value"))) > 0)
-      .select(col("value"),
-        json_tuple(col("value"), "type", "stream", "record", "version",
-          "time_extracted"))
-      .toDF("value", "t", "stream", "record", "version", "te")
-      .persist()
+    val routed = route(lines).persist()
     // one wall-clock stamp per load, shared by every stream (singer-sdk's
     // sync_started_at); only meaningful when add_record_metadata is on
     val syncStartedAt = new java.sql.Timestamp(System.currentTimeMillis())
     try {
-      // ---- protocol validation (one aggregation job) ----
-      val knownTypes =
-        Seq("RECORD", "SCHEMA", "STATE", "ACTIVATE_VERSION", "BATCH")
-      val probe = routed.agg(
-        max(when(col("t").isNull, col("value"))).as("untyped"),
-        max(when(col("t") === "RECORD" && col("record").isNull, col("value")))
-          .as("null_record"),
-        max(when(!col("t").isin(knownTypes: _*), col("t")))
-          .as("unknown_type")).collect().head
-      if (probe.getString(0) != null)
-        throw new InvalidConfigException(
-          s"line without a Singer 'type': ${probe.getString(0).take(200)}")
-      if (probe.getString(1) != null)
-        throw new InvalidConfigException(
-          s"RECORD message without a record payload: ${probe.getString(1).take(200)}")
-      if (probe.getString(2) != null)
-        throw new InvalidConfigException(
-          s"unknown Singer message type: ${probe.getString(2)}")
-
-      // ---- control plane: reduced to a BOUNDED set before collect ----
+      // ---- pass A: protocol probe + control plane + RECORD streams ----
       val control = controlMessages(routed)
 
       val schemas = scala.collection.mutable.LinkedHashMap.empty[String, SchemaMessage]
@@ -95,7 +97,7 @@ object SingerLoader {
       var lastState: Option[String] = None
       val activates = Seq.newBuilder[ActivateVersionMessage]
       val batches = Seq.newBuilder[BatchMessage]
-      control.foreach {
+      control.messages.foreach {
         case sm: SchemaMessage =>
           // in-batch schema evolution: reject loudly (file-split order is
           // size-based, so "which SCHEMA came last" is not well-defined)
@@ -115,30 +117,29 @@ object SingerLoader {
           s"BATCH messages for streams with no SCHEMA: ${batchOrphans.mkString(", ")}")
 
       // records for a stream with no SCHEMA are a protocol violation
-      // (singer-sdk raises on RECORD-before-SCHEMA; so do we); the same
-      // per-stream pass notes which streams carry RECORD-level `version`
-      // stamps (full-table replication), so stamping below is data-driven
-      val perStream = routed.filter(col("t") === "RECORD")
-        .groupBy(col("stream"))
-        .agg(max(col("version").isNotNull).as("versioned")).collect()
-      val orphan = perStream.map(_.getString(0)).filterNot(schemas.contains)
+      // (singer-sdk raises on RECORD-before-SCHEMA; so do we)
+      val orphan = control.recordCounts.keys.filterNot(schemas.contains)
       if (orphan.nonEmpty)
         throw new InvalidConfigException(
           s"RECORD messages for streams with no SCHEMA: ${orphan.mkString(", ")}")
-      val versionedStreams =
-        perStream.filter(_.getBoolean(1)).map(_.getString(0)).toSet
+      def inlineRecords(stream: String) = control.recordCounts.getOrElse(stream, 0L)
 
-      // ---- record plane: fully distributed per stream ----
       // stream-level stream maps resolve each input stream to its output
       // name (aliasing) or to suppression (`__NULL__` / `__else__`
       // catch-all) BEFORE any record work — a suppressed stream costs
       // nothing beyond its control-plane entry
-      schemas.values.foreach { sm =>
-       config.resolveStream(sm.stream).foreach { outStream =>
-        // JSON-Schema validation covers inline RECORDs; BATCH files are
-        // tap-encoded bulk payloads and bypass per-record validation
-        // (singer-sdk parity: batch mode skips record-level processing)
-        if (config.validateRecords) validateStream(routed, sm)
+      val targets = schemas.values.toSeq.flatMap(sm =>
+        config.resolveStream(sm.stream).map(sm -> _))
+
+      // ---- pass B: validate every stream before writing any ----
+      // JSON-Schema validation covers inline RECORDs; BATCH files are
+      // tap-encoded bulk payloads and bypass per-record validation
+      // (singer-sdk parity: batch mode skips record-level processing)
+      if (config.validateRecords)
+        validateStream(routed, targets.map(_._1).filter(sm => inlineRecords(sm.stream) > 0))
+
+      // ---- record plane: fully distributed per stream ----
+      targets.foreach { case (sm, outStream) =>
         val nested = JsonSchemaConverter.toStructType(sm.schemaJson)
         val inline = routed
           .filter(col("t") === "RECORD" && col("stream") === sm.stream)
@@ -149,18 +150,15 @@ object SingerLoader {
         // identical parse → flatten → stream-maps → extra-fields path as
         // inline RECORDs (q69_batch_ingest asserts byte-identical output) —
         // batch rows just carry no message-level version/time_extracted.
-        val raw = batchesByStream.get(sm.stream) match {
-          case Some(bms) =>
-            val files = bms.flatMap(_.manifest)
-            if (files.isEmpty) inline
-            else inline.unionByName(
-              spark.read.textFile(files: _*).toDF("record")
-                .filter(length(trim(col("record"))) > 0)
-                .select(col("record"),
-                  lit(null).cast("string").as("version"),
-                  lit(null).cast("string").as("te")))
-          case None => inline
-        }
+        val batchFiles = batchesByStream.getOrElse(sm.stream, Nil).flatMap(_.manifest)
+        val raw =
+          if (batchFiles.isEmpty) inline
+          else inline.unionByName(
+            spark.read.textFile(batchFiles: _*).toDF("record")
+              .filter(length(trim(col("record"))) > 0)
+              .select(col("record"),
+                lit(null).cast("string").as("version"),
+                lit(null).cast("string").as("te")))
         // non-record columns stamped alongside the parsed payload:
         //  - `_sdc_table_version` when the stream is version-stamped
         //    (full-table replication; ACTIVATE_VERSION purges by it —
@@ -171,7 +169,7 @@ object SingerLoader {
         //    and the sequence is an opaque per-load monotonic id (the SDK
         //    uses consumption-time epoch-millis — equally opaque)
         val extras = Seq.newBuilder[(String, org.apache.spark.sql.Column)]
-        if (versionedStreams(sm.stream))
+        if (control.versionedStreams(sm.stream))
           extras += VersionPurge.SdcTableVersionCol -> col("version").cast("long")
         if (config.addRecordMetadata) {
           extras += "_sdc_extracted_at" -> col("te").cast("timestamp")
@@ -196,9 +194,16 @@ object SingerLoader {
             extraCols.map { case (n, c) => c.as(n) }: _*)
           .select(recordFields ++ extraCols.map(p => col(p._1)): _*)
         val transformed = transform(records, sm.stream, config)
-        new ParquetSink(spark, config, outStream, transformed.schema)
-          .write(transformed)
-       }
+        // a stream with no rows writes no file (nor does the reference).
+        // Pass A's count decides for inline RECORDs; only BATCH files and a
+        // `__filter__` stream map leave the row count open to a probe
+        val mayBeEmpty = batchFiles.nonEmpty ||
+          config.streamProperties(sm.stream).contains(StreamMaps.FilterKey)
+        val hasRows =
+          if (mayBeEmpty) !transformed.isEmpty else inlineRecords(sm.stream) > 0
+        if (hasRows)
+          new ParquetSink(spark, config, outStream, transformed.schema)
+            .write(transformed)
       }
 
       // ACTIVATE_VERSION: after the batch's records are committed, purge
@@ -215,60 +220,98 @@ object SingerLoader {
     } finally routed.unpersist()
   }
 
-  /** Control-plane reduction to a BOUNDED collect. A protocol-conformant
-    * tap emits a handful of control lines, but nothing stops one from
-    * emitting STATE after every record (some do) — collecting every
-    * non-RECORD line verbatim would OOM the driver on a large replay.
-    * Reduce distributively first: STATE collapses to the single last
-    * message in input order (`monotonically_increasing_id` follows the
-    * partition order that already defines this batch's "last STATE wins"
-    * semantics — see the ordering note in the class doc), and
-    * SCHEMA / ACTIVATE_VERSION / BATCH collapse to their first-seen
-    * DISTINCT lines (a tap re-emitting its SCHEMA before every record
-    * collapses to one row per distinct schema; in-batch conflict detection
-    * needs exactly the distinct set). Collected volume is
-    * O(distinct control lines) + 1, independent of input length. */
-  private[graft] def controlMessages(
-      routed: DataFrame): Seq[SingerMessage] = {
-    val ordered = routed.filter(col("t") =!= "RECORD")
-      .select(col("value"), col("t"),
-        monotonically_increasing_id().as("ord"))
-    val lastState = ordered.filter(col("t") === "STATE")
-      .agg(max_by(col("value"), col("ord")).as("value"))
-      .collect().headOption.flatMap(r => Option(r.getString(0)))
-    val rest = ordered.filter(col("t") =!= "STATE")
-      .groupBy(col("value")).agg(min(col("ord")).as("ord"))
-      .orderBy(col("ord")).select(col("value"))
-      .collect().map(_.getString(0)).toSeq
-    (rest ++ lastState).map(SingerMessage.parse)
+  /** Pass A: one grouped aggregation over the routed cache, collected as
+    * one row per distinct SCHEMA / ACTIVATE_VERSION / BATCH line, one per
+    * RECORD stream, and one for the rest (STATE lines and lines the probe
+    * rejects). That is O(distinct control lines), independent of input
+    * length — a tap may emit STATE after every record, or re-emit its
+    * SCHEMA before every record, without growing the collect.
+    *
+    *  - protocol probe: any untyped line, payload-less RECORD or unknown
+    *    type raises before anything is parsed on the driver;
+    *  - control order: each distinct control line's first
+    *    `monotonically_increasing_id`, sorted on the driver (the id
+    *    follows the partition order that defines this batch's "last STATE
+    *    wins" semantics — see the ordering note in the class doc);
+    *    in-batch conflict detection needs exactly the distinct set;
+    *  - STATE: the single last message in that order;
+    *  - per RECORD stream: the inline record count and whether any record
+    *    carries a `version` stamp (full-table replication). */
+  private[graft] def controlMessages(routed: DataFrame): ControlPlane = {
+    val t = col("t")
+    val isRecord = t === "RECORD"
+    val isControl = t.isin("SCHEMA", "ACTIVATE_VERSION", "BATCH")
+    val isState = t === "STATE"
+    val rows = routed
+      .withColumn("ord", monotonically_increasing_id())
+      .groupBy(
+        when(isRecord || isControl, t).as("kind"),
+        when(isRecord, col("stream")).when(isControl, col("value")).as("key"))
+      .agg(
+        min(col("ord")).as("ord"),
+        max_by(when(isState, col("value")), when(isState, col("ord"))).as("state"),
+        count(lit(1)).as("n"),
+        max(col("version").isNotNull).as("versioned"),
+        max(when(t.isNull, col("value"))).as("untyped"),
+        max(when(isRecord && col("record").isNull, col("value"))).as("null_record"),
+        max(when(!t.isin(KnownTypes: _*), t)).as("unknown_type"))
+      .collect()
+    def probe(c: String) = rows.flatMap(r => Option(r.getAs[String](c))).maxOption
+    probe("untyped").foreach(v => throw new InvalidConfigException(
+      s"line without a Singer 'type': ${v.take(200)}"))
+    probe("null_record").foreach(v => throw new InvalidConfigException(
+      s"RECORD message without a record payload: ${v.take(200)}"))
+    probe("unknown_type").foreach(v => throw new InvalidConfigException(
+      s"unknown Singer message type: $v"))
+    val (records, rest) = rows.partition(_.getAs[String]("kind") == "RECORD")
+    val (lines, other) = rest.partition(_.getAs[String]("kind") != null)
+    val state = other.flatMap(r => Option(r.getAs[String]("state")))
+    ControlPlane(
+      (lines.sortBy(_.getAs[Long]("ord")).map(_.getAs[String]("key")) ++ state)
+        .map(SingerMessage.parse).toSeq,
+      records.map(r => r.getAs[String]("key") -> r.getAs[Long]("n")).toMap,
+      records.filter(_.getAs[Boolean]("versioned")).map(_.getAs[String]("key")).toSet)
   }
 
-  /** JSON-Schema record validation (singer-sdk parity, reference standard
-    * suite tests/test_core.py:26-33): every RECORD must *contain* each
-    * `required` property (present-but-null is valid when the type union
-    * admits "null" — `json_object_keys` gives exact presence semantics,
-    * where a post-parse NULL check could not tell missing from null), and
-    * every `key_properties` column must be non-NULL (it is the primary
-    * key). One counting aggregation over the already-persisted routed
-    * cache — streams that declare no constraints skip the pass entirely. */
-  private def validateStream(routed: DataFrame, sm: SchemaMessage): Unit = {
-    val required = JsonSchemaConverter.requiredFields(sm.schemaJson)
-    val violations: Seq[org.apache.spark.sql.Column] =
-      required.map(f =>
-        !array_contains(expr("json_object_keys(record)"), lit(f))) ++
-      sm.keyProperties.map(k => get_json_object(col("record"), s"$$['$k']").isNull)
-    if (violations.isEmpty) return
-    val bad = violations.reduce(_ || _)
-    val v = routed
-      .filter(col("t") === "RECORD" && col("stream") === sm.stream)
-      .agg(count(when(bad, 1)).as("n"),
-        max(when(bad, col("record"))).as("example")).collect().head
-    if (v.getLong(0) > 0)
-      throw new RecordValidationException(
-        s"stream '${sm.stream}': ${v.getLong(0)} record(s) violate the " +
-          s"declared schema (required: ${required.mkString(",")}; " +
-          s"key_properties: ${sm.keyProperties.mkString(",")}); " +
-          s"example: ${Option(v.getString(1)).getOrElse("").take(300)}")
+  /** Pass B, JSON-Schema record validation (singer-sdk parity, reference
+    * standard suite tests/test_core.py:26-33): every RECORD must *contain*
+    * each `required` property (present-but-null is valid when the type
+    * union admits "null" — `json_object_keys` gives exact presence
+    * semantics, where a post-parse NULL check could not tell missing from
+    * null), and every `key_properties` column must be non-NULL (it is the
+    * primary key). One counting aggregation over the persisted routed
+    * cache covers every stream in `streams` that declares constraints,
+    * each through its own branch of a `CASE stream WHEN …` predicate;
+    * none declaring any skips the pass. The first violating stream in
+    * `streams` order raises. */
+  private def validateStream(routed: DataFrame, streams: Seq[SchemaMessage]): Unit = {
+    val checks = streams.flatMap { sm =>
+      val required = JsonSchemaConverter.requiredFields(sm.schemaJson)
+      val violations: Seq[org.apache.spark.sql.Column] =
+        required.map(f =>
+          !array_contains(expr("json_object_keys(record)"), lit(f))) ++
+        sm.keyProperties.map(k => get_json_object(col("record"), s"$$['$k']").isNull)
+      violations.reduceOption(_ || _).map(bad => (sm, required, bad))
+    }
+    if (checks.isEmpty) return
+    val stream = col("stream")
+    val bad = checks.tail.foldLeft(when(stream === checks.head._1.stream, checks.head._3)) {
+      case (c, (sm, _, b)) => c.when(stream === sm.stream, b)
+    }
+    val found = routed
+      .filter(col("t") === "RECORD" && stream.isin(checks.map(_._1.stream): _*))
+      .groupBy(stream)
+      .agg(count(when(bad, 1)).as("n"), max(when(bad, col("record"))).as("example"))
+      .collect().map(r => r.getString(0) -> r).toMap
+    checks.foreach { case (sm, required, _) =>
+      found.get(sm.stream).filter(_.getLong(1) > 0).foreach { v =>
+        throw new RecordValidationException(
+          s"stream '${sm.stream}': ${v.getLong(1)} record(s) violate the " +
+            s"declared schema (required: ${required.mkString(",")}; " +
+            s"key_properties: ${sm.keyProperties.mkString(",")}); " +
+            s"example: ${Option(v.getString(2)).getOrElse("").take(300)}")
+      }
+    }
   }
 
   /** The per-stream projection pipeline: flatten → stream maps → extra

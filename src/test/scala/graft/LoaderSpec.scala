@@ -582,7 +582,6 @@ class LoaderSpec extends AnyFunSuite {
 
   test("1M STATE lines reduce to a bounded collect with last-state-wins intact") {
     import spark.implicits._
-    import org.apache.spark.sql.functions._
     val n = 1000000L
     val states = spark.range(n)
       .map(i => s"""{"type": "STATE", "value": {"n": $i}}""")
@@ -593,15 +592,103 @@ class LoaderSpec extends AnyFunSuite {
 
     // the distributive reduction must collect O(distinct control lines),
     // not one row per STATE: 1 schema + 1 surviving state = 2 messages
-    val routed = lines.toDF("value")
-      .select(col("value"),
-        get_json_object(col("value"), "$.type").as("t"))
-    assert(SingerLoader.controlMessages(routed).size === 2)
+    val routed = SingerLoader.route(lines)
+    assert(SingerLoader.controlMessages(routed).messages.size === 2)
 
     // end-to-end: the LAST state in input order wins
     val result = SingerLoader.load(spark, lines,
       GraftConfig(hdfsDestinationPath = tmpDir()))
     assert(result.lastState.exists(_.contains((n - 1).toString)))
     assert(result.streams === Seq("t"))
+  }
+
+  // ---- check passes: a fixed number of scans, all before any write -----
+
+  def constrainedSchema(stream: String): String =
+    s"""{"type": "SCHEMA", "stream": "$stream", "schema": {"type": "object", "required": ["id"], "properties": {"id": {"type": "integer"}, "name": {"type": ["string", "null"]}}}, "key_properties": ["id"]}"""
+
+  def constrainedStreams(streams: String*): Seq[String] =
+    streams.flatMap(s => Seq(constrainedSchema(s),
+      s"""{"type": "RECORD", "stream": "$s", "record": {"id": 1, "name": "a"}}""",
+      s"""{"type": "RECORD", "stream": "$s", "record": {"id": 2, "name": null}}"""))
+
+  /** Ids of the Spark jobs a load launched, split into those of its writes
+    * (launched under `ParquetSink.write`, directly or through their SQL
+    * execution) and the rest. */
+  def loadJobs(lines: Seq[String]): (Seq[Int], Seq[Int]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val sc = spark.sparkContext
+    val execSites = scala.collection.concurrent.TrieMap.empty[Long, String]
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String, Option[Long])]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add((e.jobId, e.stageInfos.map(_.details).mkString("\n"),
+          Option(e.properties).flatMap(p =>
+            Option(p.getProperty("spark.sql.execution.id"))).map(_.toLong)))
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => execSites(s.executionId) = s.details
+        case _ =>
+      }
+    }
+    val input = writeFixture(lines)
+    org.apache.spark.GraftSparkInternals.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    try SingerLoader.loadFile(spark, input, GraftConfig(hdfsDestinationPath = tmpDir()))
+    finally {
+      org.apache.spark.GraftSparkInternals.drainListenerBus(sc)
+      sc.removeSparkListener(listener)
+    }
+    import scala.jdk.CollectionConverters._
+    val (writes, checks) = jobs.asScala.toSeq.sortBy(_._1).partition {
+      case (_, details, exec) => (details +: exec.flatMap(execSites.get).toSeq)
+        .exists(_.contains("ParquetSink.write"))
+    }
+    (writes.map(_._1), checks.map(_._1))
+  }
+
+  test("check jobs do not grow with the stream count and all precede the first write") {
+    val (writes1, checks1) = loadJobs(constrainedStreams("a"))
+    val (writes3, checks3) = loadJobs(constrainedStreams("a", "b", "c"))
+    assert(writes1.nonEmpty && writes3.nonEmpty)
+    assert(checks1.nonEmpty)
+    assert(checks3.size === checks1.size,
+      s"1 stream: ${checks1.size} check jobs, 3 streams: ${checks3.size}")
+    assert(checks3.max < writes3.min)
+  }
+
+  test("a violation in a later stream lands no stream of the batch") {
+    val out = tmpDir()
+    val ex = intercept[graft.core.RecordValidationException] {
+      SingerLoader.loadFile(spark, writeFixture(constrainedStreams("a", "b") :+
+        """{"type": "RECORD", "stream": "b", "record": {"name": "no id"}}"""),
+        GraftConfig(hdfsDestinationPath = out))
+    }
+    assert(ex.getMessage.contains("stream 'b': 1 record(s)"))
+    assert(!new java.io.File(s"$out/a").exists())
+    assert(!new java.io.File(s"$out/b").exists())
+  }
+
+  test("streams left with no rows write nothing; RECORD without stream raises") {
+    val blank = Files.createTempFile("blank", ".jsonl")
+    Files.write(blank, "\n  \n\n".getBytes("UTF-8"))
+    val out = tmpDir()
+    val result = SingerLoader.loadFile(spark, writeFixture(Seq(
+      fixture.head,
+      s"""{"type": "BATCH", "stream": "t", "encoding": {"format": "jsonl", "compression": "none"}, "manifest": ["file://$blank"]}""")),
+      GraftConfig(hdfsDestinationPath = out))
+    assert(result.streams === Seq("t"))
+    assert(!new java.io.File(s"$out/t").exists())
+    // inline RECORDs that a `__filter__` stream map drops entirely: no file either
+    SingerLoader.loadFile(spark, writeFixture(fixture),
+      GraftConfig(hdfsDestinationPath = out, streamMaps = Map("t" ->
+        StreamMapSpec.Properties(Map("__filter__" -> Some("col1 > 100"))))))
+    assert(!new java.io.File(s"$out/t").exists())
+    intercept[graft.core.InvalidConfigException] {
+      SingerLoader.loadFile(spark, writeFixture(Seq(
+        fixture.head,
+        """{"type": "RECORD", "record": {"col1": 1, "col2": "a", "col3": true}}""")),
+        GraftConfig(hdfsDestinationPath = tmpDir()))
+    }
   }
 }
